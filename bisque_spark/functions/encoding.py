@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import codecs
 import re
+from collections.abc import Iterator
 
 # Same declared-encoding patterns as the reference
 # (src/bisque/dammit/encodings.py:10-21) — these are the standard
@@ -101,7 +102,7 @@ def iter_candidate_encodings(
     user: tuple[str, ...] = (),
     is_html: bool = True,
     exclude: tuple[str, ...] = (),
-) -> tuple[bytes, "Iterator[str]"]:
+) -> tuple[bytes, Iterator[str]]:
     """(BOM-stripped bytes, LAZY ordered candidate encodings).
 
     Same order and dedup as candidate_encodings, but the chardet scan

@@ -24,17 +24,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
-from dataclasses import dataclass
-
-_TIMING = os.environ.get("BISQUE_CRAWL_TIMING") == "1"
-
-
-def _tick(label: str, t0: float) -> float:
-    now = time.time()
-    if _TIMING:
-        print(f"    [crawl-timing] {label}: {now - t0:.2f}s", flush=True)
-    return now
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -138,14 +127,6 @@ def _parquet_num_rows(path: str) -> int:
     for f in glob.glob(os.path.join(path, "*.parquet")):
         total += pq.ParquetFile(f).metadata.num_rows
     return total
-
-
-@dataclass
-class CrawlState:
-    epoch: int
-    frontier: DataFrame | None
-    seen_exact: DataFrame | None
-    shards: DataFrame | None
 
 
 def _epoch_dir(workdir: str, epoch: int) -> str:
@@ -308,7 +289,6 @@ def run_crawl(
     elif os.path.isdir(workdir):
         shutil.rmtree(workdir)
 
-    t_pre = time.time()
     frontier_on_disk: str | None = None
     if start_epoch == 0 and frontier is None:
         # ONE pre-loop write: the canonicalized, robots-filtered seed
@@ -376,7 +356,6 @@ def run_crawl(
     elif frontier is not None:
         frontier_on_disk = _junction_path(workdir, start_epoch - 1, "frontier")
 
-    _tick("seed writes (pre-loop)", t_pre)
     # deferred epoch finalizers (observational-slice join + _COMMIT):
     # at most one is ever pending — epoch N's is joined at the top of
     # epoch N+1's commit section or at loop exit
@@ -388,7 +367,6 @@ def run_crawl(
 
     epoch = start_epoch
     while epoch < max_epochs and frontier is not None:
-        t = time.time()
         # every frontier (seed included) is parquet-backed: emptiness
         # (and size) from parquet footers — a driver-local metadata
         # read, no Spark job. Fall back to isEmpty for a caller-supplied
@@ -400,7 +378,6 @@ def run_crawl(
                 break
         elif frontier.isEmpty():
             break
-        t = _tick("frontier-empty check", t)
         # the salted two-phase rank is skew armor for huge frontiers;
         # below ~200k rows the single exact window is result-identical
         # and one shuffle cheaper (footer count makes this free)
@@ -486,11 +463,7 @@ def run_crawl(
         # r7 A/B probe, now the default: the dedicated warm count was
         # ~2 s/epoch of serial driver+action latency and the junction
         # job absorbs the same work for ~1 s — measured 14.7 → 13.0 s
-        # on the bench world). _FORCE_WARM restores the old two-action
-        # shape for A/B.
-        if globals().get("_FORCE_WARM"):
-            next_frontier.count()
-        t = _tick("fetch+extract+dedup (cache warm)", t)
+        # on the bench world).
 
         # ---- commit epoch state ------------------------------------------
         # Two write jobs per epoch (r8): the STATE slices the next
@@ -572,12 +545,11 @@ def run_crawl(
         junction_state.write.mode("overwrite").partitionBy("table").parquet(
             os.path.join(d, "junction")
         )
-        t = _tick("junction state write (4 slices)", t)
 
         epoch_caches = [scheduled, extracted, new_urls, next_frontier]
 
         def _finalize(dd=d, tmp=obs_tmp, th=obs_thread, err=obs_err,
-                      caches=epoch_caches, ep=epoch):
+                      caches=epoch_caches):
             th.join()
             if err:
                 raise err[0]
@@ -592,7 +564,6 @@ def run_crawl(
                 f.write("ok")
             for c in caches:
                 c.unpersist()
-            _tick(f"obs join + _COMMIT (epoch {ep})", time.time())
 
         pending_finalize.append(_finalize)
 
@@ -612,7 +583,6 @@ def run_crawl(
                 or_merge_shards(_read_shard_union(spark, workdir, epoch)),
                 os.path.join(d, "shards_base"),
             )
-            t = _tick("state compaction (seen_base + shards_base)", t)
 
         # counters come from the lineage slice written above — a
         # one-row driver-local parquet read, not a Spark job

@@ -26,6 +26,8 @@ def get_spark(
     - Arrow on: every parse/decode/validate operator is a pandas UDF.
     - shuffle partitions default to cores locally; on a real cluster this
       should be ~2-3x total cores (set via spark-submit conf).
+    - Python workers fork from `worker_daemon`, so a reused worker does
+      not re-read pyspark.zip and the spark-core jar on every task.
     """
     cpus = DEFAULT_CPUS
     master = master or f"local[{cpus}]"
@@ -52,15 +54,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "bisque_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

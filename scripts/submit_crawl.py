@@ -35,6 +35,10 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    # Built here rather than by session.get_spark, so Python workers run
+    # the stock pyspark.daemon: on a cluster the --py-files zip joins the
+    # worker's path per task, after the daemon starts, so
+    # bisque_spark.worker_daemon is not importable at daemon start.
     spark = (
         SparkSession.builder.appName("bisque_spark_crawl")
         .config("spark.sql.adaptive.enabled", "true")
